@@ -3,7 +3,7 @@ package graft.ml
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.graftbridge.MlPersistBridge
-import org.apache.spark.ml.param.{BooleanParam, DoubleParam, LongParam, Param, ParamMap}
+import org.apache.spark.ml.param.{DoubleParam, LongParam, Param, ParamMap, Params}
 import org.apache.spark.ml.util.{DefaultParamsReadable, DefaultParamsWritable,
   Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset}
@@ -23,33 +23,21 @@ import org.apache.spark.sql.types.StructType
   * that re-sampled any input would silently subsample evaluation data
   * (caught by the end-to-end threshold-curve totals check).
   *
-  * Sampling modes: seeded Bernoulli (`sample`, like the reference), or
-  * deterministic multiplicative hash of the id (`hashSampling=true`) —
-  * reproducible across runs/partitionings and SQL-portable, which is
-  * what lets the DuckDB oracle verify the estimator end-to-end.
+  * Sampling is a deterministic multiplicative hash of the id (where the
+  * reference draws a seeded Bernoulli `sample`) — reproducible across
+  * runs/partitionings and SQL-portable, which is what lets the DuckDB
+  * oracle verify the estimator end-to-end.
   */
 class RandomUnderSampler(override val uid: String)
-    extends Estimator[RandomUnderSamplerModel] with DefaultParamsWritable {
+    extends Estimator[RandomUnderSamplerModel] with RandomUnderSamplerParams
+    with DefaultParamsWritable {
 
   def this() = this(Identifiable.randomUID("randomUnderSampler"))
-
-  final val labelCol = new Param[String](this, "labelCol", "binary label column")
-  final val targetImbalanceRatio = new DoubleParam(this, "targetImbalanceRatio",
-    "desired n_negative / n_positive after sampling")
-  final val seed = new LongParam(this, "seed", "sampling seed")
-  final val indexCol = new Param[String](this, "indexCol",
-    "unique row id column (the reference's indexCol) — removal is tracked by id")
-  final val hashSampling = new BooleanParam(this, "hashSampling",
-    "sample by deterministic multiplicative hash of indexCol instead of rand()")
-
-  setDefault(labelCol -> "label", targetImbalanceRatio -> 1.0, seed -> 42L,
-    indexCol -> "sample_id", hashSampling -> false)
 
   def setLabelCol(v: String): this.type = set(labelCol, v)
   def setTargetImbalanceRatio(v: Double): this.type = set(targetImbalanceRatio, v)
   def setSeed(v: Long): this.type = set(seed, v)
   def setIndexCol(v: String): this.type = set(indexCol, v)
-  def setHashSampling(v: Boolean): this.type = set(hashSampling, v)
 
   override def fit(ds: Dataset[_]): RandomUnderSamplerModel = {
     val l = col($(labelCol)).cast("double")
@@ -62,11 +50,8 @@ class RandomUnderSampler(override val uid: String)
     val removedIds =
       if (keep >= 1.0) None
       else {
-        val neg = ds.toDF().filter(l === 0.0)
-        val removed =
-          if ($(hashSampling))
-            neg.filter(RandomUnderSampler.hashKeepScore(col($(indexCol)), $(seed)) >= keep)
-          else neg.sample(withReplacement = false, 1.0 - keep, $(seed))
+        val removed = ds.toDF().filter(l === 0.0)
+          .filter(RandomUnderSampler.hashKeepScore(col($(indexCol)), $(seed)) >= keep)
         // small relative to the input (the complement of the kept set);
         // persisted so every downstream transform reuses one evaluation
         Some(removed.select(col($(indexCol)))
@@ -79,6 +64,19 @@ class RandomUnderSampler(override val uid: String)
   override def transformSchema(schema: StructType): StructType = schema
 
   override def copy(extra: ParamMap): RandomUnderSampler = defaultCopy(extra)
+}
+
+/** Params shared by [[RandomUnderSampler]] and its model. */
+private[ml] trait RandomUnderSamplerParams extends Params {
+  final val labelCol = new Param[String](this, "labelCol", "binary label column")
+  final val targetImbalanceRatio = new DoubleParam(this, "targetImbalanceRatio",
+    "desired n_negative / n_positive after sampling")
+  final val seed = new LongParam(this, "seed", "sampling seed")
+  final val indexCol = new Param[String](this, "indexCol",
+    "unique row id column (the reference's indexCol) — removal is tracked by id")
+
+  setDefault(labelCol -> "label", targetImbalanceRatio -> 1.0, seed -> 42L,
+    indexCol -> "sample_id")
 }
 
 object RandomUnderSampler extends DefaultParamsReadable[RandomUnderSampler] {
@@ -97,16 +95,7 @@ object RandomUnderSampler extends DefaultParamsReadable[RandomUnderSampler] {
 
 class RandomUnderSamplerModel(override val uid: String, val keepFraction: Double,
     val removedIds: Option[DataFrame])
-    extends Model[RandomUnderSamplerModel] with MLWritable {
-
-  final val labelCol = new Param[String](this, "labelCol", "binary label column")
-  final val seed = new LongParam(this, "seed", "sampling seed")
-  final val indexCol = new Param[String](this, "indexCol", "unique row id column")
-  final val hashSampling = new BooleanParam(this, "hashSampling", "deterministic-hash mode")
-  final val targetImbalanceRatio = new DoubleParam(this, "targetImbalanceRatio",
-    "desired n_negative / n_positive after sampling")
-  setDefault(labelCol -> "label", seed -> 42L, indexCol -> "sample_id",
-    hashSampling -> false)
+    extends Model[RandomUnderSamplerModel] with RandomUnderSamplerParams with MLWritable {
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val df = ds.toDF()

@@ -66,7 +66,7 @@ object Trainers {
       numTrees: Int = 100, maxDepth: Int = 25): Pipeline = {
     val sampler = new RandomUnderSampler()
       .setTargetImbalanceRatio(targetImbalanceRatio).setSeed(seed)
-      .setIndexCol(indexCol).setHashSampling(true)
+      .setIndexCol(indexCol)
     val weighter = new ClassWeighter().setClassWeights(classWeights)
     val stages: Array[PipelineStage] =
       Array(sampler, weighter, assembler(featureCols), brfClassifier(seed, numTrees, maxDepth))

@@ -18,8 +18,8 @@ import org.apache.spark.storage.StorageLevel
   * saturates, and depth is bounded (k is small by use-case), so lineage
   * stays shallow — no checkpoint machinery needed, unlike the
   * fixed-point closure in connectedComponents. Per-round frontiers are
-  * persisted (each is consumed twice); `kHopReleasable` exposes the
-  * unpersist for long-lived sessions.
+  * persisted (each is consumed twice) and released once the result is
+  * materialized.
   */
 object Bfs {
 
@@ -29,25 +29,11 @@ object Bfs {
     *
     * Materializes the result once (eager localCheckpoint) and releases
     * every per-round frontier cache immediately, so repeated calls in a
-    * long-lived session cannot accumulate persisted blocks; use
-    * [[kHopReleasable]] to control materialization timing yourself.
+    * long-lived session cannot accumulate persisted blocks.
     */
   def kHop(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       srcCol: String = "src", dstCol: String = "dst",
       nodeCol: String = "node"): DataFrame = {
-    val (visited, release) =
-      kHopReleasable(edges, seeds, maxHops, srcCol, dstCol, nodeCol)
-    val out = visited.localCheckpoint(true)
-    release()
-    out
-  }
-
-  /** [[kHop]] plus a thunk that unpersists the per-round frontiers once
-    * the result has been materialized.
-    */
-  def kHopReleasable(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      srcCol: String = "src", dstCol: String = "dst",
-      nodeCol: String = "node"): (DataFrame, () => Unit) = {
     require(maxHops >= 0, s"maxHops=$maxHops must be >= 0")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     var frontier = seeds.select(col(nodeCol).cast("long").as("node")).distinct()
@@ -92,6 +78,8 @@ object Bfs {
       visited = visited.union(next)
       frontier = next
     }
-    (visited, () => rounds.foreach(_.unpersist()))
+    val out = visited.localCheckpoint(true)
+    rounds.foreach(_.unpersist())
+    out
   }
 }

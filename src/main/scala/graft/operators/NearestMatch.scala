@@ -43,15 +43,12 @@ object NearestMatch {
     * @return left columns + rightId + distance_m + rank `rk` ≤ k
     *
     * The widening loop persists one `proven` frame per round (each feeds
-    * both the straggler anti-join and the final union). This default
-    * entry point materializes the result ONCE (eager localCheckpoint,
-    * which also truncates the multi-round lineage) and then releases
-    * every per-round cache immediately, so repeated calls in a
-    * long-lived session cannot accumulate persisted blocks (a leak the
-    * round-9 advisor flagged on this path — the e2e pipeline calls it).
-    * Callers that want to control materialization timing themselves
-    * (e.g. to write the result before releasing) should use
-    * [[kNearestReleasable]].
+    * both the straggler anti-join and the final union). The result is
+    * materialized ONCE (eager localCheckpoint, which also truncates the
+    * multi-round lineage) and every per-round cache is released
+    * immediately after, so repeated calls in a long-lived session cannot
+    * accumulate persisted blocks (a leak the round-9 advisor flagged on
+    * this path — the e2e pipeline calls it).
     */
   def kNearest(left: DataFrame, right: DataFrame, k: Int,
       leftId: String, rightId: String,
@@ -59,31 +56,6 @@ object NearestMatch {
       latR: String = "lat", lonR: String = "lon",
       cellDeg: Double = 0.1, maxAbsLatDeg: Double = 60.0,
       widenRounds: Int = 3, exhaustive: Boolean = false): DataFrame = {
-    val (matched, release) = kNearestReleasable(left, right, k, leftId, rightId,
-      latL, lonL, latR, lonR, cellDeg, maxAbsLatDeg, widenRounds, exhaustive)
-    if (exhaustive) matched // nothing persisted on the exhaustive path
-    else {
-      // eager: the checkpoint blocks back the returned frame, so the
-      // per-round caches can be dropped NOW instead of leaking; the
-      // blocks themselves are reclaimed by the ContextCleaner when the
-      // frame goes out of scope (vs. persists, which outlive it)
-      val out = matched.localCheckpoint(eager = true)
-      release()
-      out
-    }
-  }
-
-  /** [[kNearest]] plus a release thunk that unpersists the per-round
-    * cached frames — call it AFTER materializing the result (the frames
-    * back the result's plan; releasing first forces recomputation).
-    */
-  def kNearestReleasable(left: DataFrame, right: DataFrame, k: Int,
-      leftId: String, rightId: String,
-      latL: String = "lat", lonL: String = "lon",
-      latR: String = "lat", lonR: String = "lon",
-      cellDeg: Double = 0.1, maxAbsLatDeg: Double = 60.0,
-      widenRounds: Int = 3, exhaustive: Boolean = false): (DataFrame, () => Unit) = {
-
     // Rename right-side coordinates internally so identically-named
     // left/right columns (e.g. both "lat"/"lon", the defaults) can never
     // make the distance expression ambiguous after the join.
@@ -97,7 +69,8 @@ object NearestMatch {
         orderBy = Seq(col("distance_m"), col(rightId)), // rightId = deterministic tie-break
         k = k)
 
-    if (exhaustive) return (rankK(left.crossJoin(r)), () => ())
+    // nothing persisted on the exhaustive path
+    if (exhaustive) return rankK(left.crossJoin(r))
 
     // One grid round: equi-join on cell id (right side exploded to its
     // 3×3 neighbourhood — 9× the smaller side, NOT a cross join), then
@@ -149,7 +122,12 @@ object NearestMatch {
     // scale a geometrically-shrunk set, typically empty.
     val fallback = rankK(remaining.crossJoin(r))
     val rounds = provens.result()
-    ((rounds :+ fallback).reduce(_ unionByName _),
-      () => rounds.foreach(_.unpersist()))
+    // eager: the checkpoint blocks back the returned frame, so the
+    // per-round caches can be dropped NOW instead of leaking; the
+    // blocks themselves are reclaimed by the ContextCleaner when the
+    // frame goes out of scope (vs. persists, which outlive it)
+    val out = (rounds :+ fallback).reduce(_ unionByName _).localCheckpoint(eager = true)
+    rounds.foreach(_.unpersist())
+    out
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * irregular event stream into a regular per-key time series (one row
   * per key per grid step between the key's first and last observation),
   * forward-filling each gap with the latest earlier value — the
-  * sensor/feature-store regularization that [[AsOfJoin]] performs for
+  * sensor/feature-store regularization that the as-of join performs for
   * a single probe instant, extended to a whole grid.
   *
   * Scale shape: the grid is generated per key with `sequence` + explode

@@ -88,20 +88,8 @@ object AccidentPipeline {
     */
   def dataset(positives: DataFrame, negatives: DataFrame,
       splitDate: String): (DataFrame, DataFrame) = {
-    val keys = Seq("street_id", "date", "hour")
-    val negDeduped = negatives.join(
-      positives.select(keys.map(col): _*), keys, "left_anti")
-    val all = positives.unionByName(negDeduped)
-
-    // per-street accident count from TRAIN-period positives only (no
-    // leakage), completed over every street via left join + fill
-    val trainCounts = positives.filter(col("date") < splitDate)
-      .groupBy(col("street_id")).agg(count(lit(1)).as("accident_count"))
-    val withCount = all.join(broadcast(trainCounts), Seq("street_id"), "left_outer")
-      .na.fill(0L, Seq("accident_count"))
-
-    (withCount.filter(col("date") < splitDate),
-      withCount.filter(col("date") >= splitDate))
+    val all = labeledSamples(positives, negatives, splitDate)
+    (all.filter(col("date") < splitDate), all.filter(col("date") >= splitDate))
   }
 
   /** [[dataset]] as ONE split-tagged frame (`split` = 'train'|'test')
@@ -116,17 +104,26 @@ object AccidentPipeline {
     * every exchange twice (guide §2.4; 70 → ~half the Exchanges).
     */
   def datasetTagged(positives: DataFrame, negatives: DataFrame,
+      splitDate: String): DataFrame =
+    labeledSamples(positives, negatives, splitDate)
+      .withColumn("split",
+        when(col("date") < splitDate, lit("train")).otherwise(lit("test")))
+
+  /** The body both splits share: deduped pos∪neg with the train-period
+    * accident count.
+    */
+  private def labeledSamples(positives: DataFrame, negatives: DataFrame,
       splitDate: String): DataFrame = {
     val keys = Seq("street_id", "date", "hour")
     val negDeduped = negatives.join(
       positives.select(keys.map(col): _*), keys, "left_anti")
     val all = positives.unionByName(negDeduped)
+    // per-street accident count from TRAIN-period positives only (no
+    // leakage), completed over every street via left join + fill
     val trainCounts = positives.filter(col("date") < splitDate)
       .groupBy(col("street_id")).agg(count(lit(1)).as("accident_count"))
     all.join(broadcast(trainCounts), Seq("street_id"), "left_outer")
       .na.fill(0L, Seq("accident_count"))
-      .withColumn("split",
-        when(col("date") < splitDate, lit("train")).otherwise(lit("test")))
   }
 
   case class TrainResult(results: DataFrame, curve: DataFrame, params: DataFrame)

@@ -20,10 +20,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   * [[AsOfJoinStrategy]] (injected via `SparkSessionExtensions`) into
   * [[AsOfJoinExec]], a sort-merge physical operator.
   *
-  * Semantics (identical to the compositional
-  * [[graft.operators.AsOfJoin]], asserted row-for-row in
-  * `NativeAsOfJoinSpec`): for each left row, the LATEST right row of the
-  * same key with `rightTime <= leftTime`; ties at equal time match.
+  * Semantics (asserted against a brute-force reference model in
+  * `NativeAsOfJoinPropSpec` and against DuckDB's ASOF JOIN by the
+  * oracles): for each left row, the LATEST right row of the same key
+  * with `rightTime <= leftTime`; ties at equal time match.
   * [[AsOfDirection.Forward]] flips the search (EARLIEST `rightTime >=
   * leftTime` — the still-streaming mirror: the candidate is peeked, not
   * consumed); [[AsOfDirection.Nearest]] takes the closer of the two,
@@ -56,15 +56,12 @@ import org.apache.spark.sql.graftbridge.Bridge
   * exactly like `SortMergeJoinExec(isSkewJoin = true)`, so a hot key
   * no longer creates a straggler task. The merge itself is
   * a streaming single pass per partition holding ONE buffered right row
-  * group — O(|L|+|R|) with O(1) memory, regardless of history depth. The
-  * compositional union+window form moves |L|+|R| rows through one
-  * partition-window too, but carries every left column through the
-  * shuffle twice (tagged union) and cannot prune; the native operator
-  * shuffles each side once with only its own columns.
+  * group — O(|L|+|R|) with O(1) memory, regardless of history depth;
+  * each side shuffles once, carrying only its own columns.
   *
   * Right (key, time) pairs should be unique for a deterministic payload
-  * (at equal times the last row in sort order wins) — same caveat as the
-  * compositional operator and DuckDB's ASOF JOIN.
+  * (at equal times the last row in sort order wins) — same caveat as
+  * DuckDB's ASOF JOIN.
   */
 /** Match direction — pandas `merge_asof(direction=...)` parity.
   * [[AsOfDirection.Backward]] (default): latest right row with
@@ -194,17 +191,10 @@ object PushLeftFiltersThroughAsOf extends Rule[LogicalPlan] with PredicateHelper
   * Codegen audit (round 14): the exec is interpreted row-at-a-time (no
   * whole-stage codegen), but its projections ARE codegen'd
   * UnsafeProjections and the merge loop is a hand-rolled iterator (no
-  * per-row allocation). Measured at sf0.1×10 (1M events, 10× per-key
-  * history): native 0.40 s vs compositional union+window 0.19 s warm
-  * under `count()` — the gap is STRUCTURAL, not interpretive: the node
-  * plans one shuffle+sort per side while the composition rides a single
-  * tagged-union window, and `count()` prunes every column through the
-  * window but cannot prune through this black-box node. The native
-  * operator wins when left rows are wide (the composition shuffles
-  * every left column twice) and when consumers project the payload
-  * (both plans then materialize it); the measured worst-case 2×
-  * interpretive overhead is accepted — `doProduce`/`doConsume` support
-  * would couple the exec to codegen internals for a bounded win.
+  * per-row allocation). `count()` cannot prune columns through this
+  * black-box node, so the match is always computed; the interpretive
+  * overhead is accepted — `doProduce`/`doConsume` support would couple
+  * the exec to codegen internals for a bounded win.
   */
 case class AsOfJoinExec(
     leftKeys: Seq[Attribute], rightKeys: Seq[Attribute],

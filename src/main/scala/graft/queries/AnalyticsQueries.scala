@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{AsOfJoin, Bootstrap, CdcMerge, ChangePoint, CohortLtv, Concentration, EmbeddingProfile, GridCluster, GroupRegression, KmvAggregator, KmvSketch, KsTest, MultiTouchAttribution, MutualInfo, NoveltyRate, PhraseSearch, Resample, RollingOrigin, Seasonal, SimilaritySearch, Skyline, Survival, TopK, WaterFill, WeightedMedian, Winsorizer}
+import graft.operators.{Bootstrap, CdcMerge, ChangePoint, CohortLtv, Concentration, EmbeddingProfile, GridCluster, GroupRegression, KmvAggregator, KmvSketch, KsTest, MultiTouchAttribution, MutualInfo, NoveltyRate, PhraseSearch, Resample, RollingOrigin, Seasonal, SimilaritySearch, Skyline, Survival, TopK, WaterFill, WeightedMedian, Winsorizer}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -174,8 +174,8 @@ object AnalyticsQueries {
     },
 
     // X112 last-touch attribution: each purchase credits the latest
-    // click by the same user within a 7-day lookback (AsOfJoin, one
-    // union + one key-partitioned window — no range join), rolled up
+    // click by the same user within a 7-day lookback (the native as-of
+    // operator — no range join), rolled up
     // per purchase day with exact integer value/latency sums.
     Q("q_events_attribution",
       """WITH p AS (SELECT event_id, user_id, ts,
@@ -198,12 +198,12 @@ object AnalyticsQueries {
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"),
           round(col("value") * 1000000).cast("long").as("val_us"))
       val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      AsOfJoin.asOf(purchases, clicks, key = "user_id",
-          leftTime = "ts", rightTime = "ts", payloadCols = Seq("event_id", "ts"))
-        .withColumn("gap_us", unix_micros(col("ts")) - unix_micros(col("asof.ts")))
+        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
+      graft.plans.NativeAsOfJoin.asOf(purchases, clicks, key = "user_id",
+          leftTime = "ts", rightTime = "click_ts", payloadCols = Seq("click_id", "click_ts"))
+        .withColumn("gap_us", unix_micros(col("ts")) - unix_micros(col("click_ts")))
         .withColumn("attr",
-          col("asof").isNotNull && col("gap_us") <= 7L * 86400L * 1000000L)
+          col("click_ts").isNotNull && col("gap_us") <= 7L * 86400L * 1000000L)
         .groupBy(to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("n_purchases"),
           sum(col("attr").cast("long")).as("n_attributed"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{Bfs, FdAudit, KAnonymity, LabelPropagation, Modularity, CountMinSketch, IntervalJoin, QuantileBinning, RangeJoin, SaltedJoin, ScanFanout}
+import graft.operators.{Bfs, FdAudit, KAnonymity, LabelPropagation, Modularity, CountMinSketch, IntervalJoin, QuantileBinning, SaltedJoin, ScanFanout}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -421,9 +421,10 @@ object Relational {
     },
 
     // Range join (no native Spark support — a naive BETWEEN join plans
-    // as a nested-loop cartesian): points bucket-equi-join the intervals
-    // overlapping their bucket, exact BETWEEN filters after. Oracle is
-    // the plain BETWEEN join.
+    // as a nested-loop cartesian): each point is a one-point interval
+    // for IntervalJoin.overlap, so it bucket-equi-joins the intervals
+    // overlapping its bucket, exact BETWEEN filters after. Oracle is the
+    // plain BETWEEN join.
     Q("q_join_range_bucketed",
       """WITH pts AS (
         |  SELECT o_orderkey % 50000 AS p, o_orderkey FROM orders),
@@ -442,8 +443,8 @@ object Relational {
         col("s_suppkey"),
         pmod(col("s_suppkey") * 97, lit(50000)).as("lo"),
         (pmod(col("s_suppkey") * 97, lit(50000)) + pmod(col("s_suppkey"), lit(400))).as("hi"))
-      RangeJoin.pointInInterval(pts, iv, pointCol = "p",
-          loCol = "lo", hiCol = "hi", bucketWidth = 256L)
+      // each point is the one-point interval [p, p]
+      IntervalJoin.overlap(pts, iv, "p", "p", "lo", "hi", bucketUs = 256L)
         .groupBy(col("s_suppkey"))
         .agg(count(lit(1)).as("n_pts"),
           min(col("o_orderkey")).as("min_key"), max(col("o_orderkey")).as("max_key"))

@@ -127,7 +127,7 @@ object TrainQueries {
         col("o_orderkey").as("id"),
         when(col("o_orderstatus") === "F", 1.0).otherwise(0.0).as("label"))
       val model = new RandomUnderSampler()
-        .setTargetImbalanceRatio(1.0).setSeed(42L).setIndexCol("id").setHashSampling(true)
+        .setTargetImbalanceRatio(1.0).setSeed(42L).setIndexCol("id")
         .fit(labeled)
       model.transform(labeled)
         .groupBy(col("label").cast("int").as("label"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.{AsOfJoin, CountMinSketch, Sessionize, TopK}
+import graft.operators.{CountMinSketch, Sessionize, TopK}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -534,12 +534,12 @@ object Windows {
     },
 
     // As-of join (operator Spark lacks): each purchase matched to the
-    // user's latest click at-or-before it — tagged-union + last-non-null
-    // window, one shuffle of |L|+|R| rows, never a range-join explosion.
-    // The oracle is DuckDB's NATIVE ASOF JOIN, an independent
-    // implementation of the semantics (ties impossible: (user_id, ts) is
-    // unique in events). Gaps exported as epoch micros so both engines
-    // compare integers.
+    // user's latest click at-or-before it through the native as-of
+    // operator, its exec picked from the click side's size — never a
+    // range-join explosion. The oracle is DuckDB's NATIVE ASOF JOIN, an
+    // independent implementation of the semantics (ties impossible:
+    // (user_id, ts) is unique in events). Gaps exported as epoch micros
+    // so both engines compare integers.
     Q("q_join_asof_click",
       """SELECT p.event_id AS purchase_id, p.user_id,
         |       c.event_id AS click_id,
@@ -552,12 +552,11 @@ object Windows {
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
       val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), col("event_id"))
-      AsOfJoin.asOf(purchases, clicks, key = "user_id",
-          leftTime = "ts", rightTime = "ts", payloadCols = Seq("event_id", "ts"))
-        .select(col("purchase_id"), col("user_id"),
-          col("asof.event_id").as("click_id"),
-          (unix_micros(col("ts")) - unix_micros(col("asof.ts"))).as("gap_us"))
+        .select(col("user_id"), col("ts").as("click_ts"), col("event_id").as("click_id"))
+      graft.plans.NativeAsOfJoin.asOf(purchases, clicks, key = "user_id",
+          leftTime = "ts", rightTime = "click_ts", payloadCols = Seq("click_id", "click_ts"))
+        .select(col("purchase_id"), col("user_id"), col("click_id"),
+          (unix_micros(col("ts")) - unix_micros(col("click_ts"))).as("gap_us"))
         .orderBy(col("purchase_id"))
     },
 
@@ -565,9 +564,8 @@ object Windows {
     // path: graft.plans.AsOfJoinNode → AsOfJoinStrategy → AsOfJoinExec
     // (sort-merge, one shuffle+sort per side, streaming O(1)-memory
     // merge), registered via SparkSessionExtensions. Also carries the
-    // click's value — three independent implementations of as-of
-    // (native exec here, union+window above, DuckDB ASOF in the oracle)
-    // must agree bit-for-bit.
+    // click's value, and pins the sort-merge exec where
+    // q_join_asof_click lets the strategy choose.
     Q("q_join_asof_native",
       """SELECT p.event_id AS purchase_id, p.user_id,
         |       c.event_id AS click_id,

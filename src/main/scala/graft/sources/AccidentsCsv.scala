@@ -23,19 +23,22 @@ object AccidentsCsv {
       .withColumn("ACCIDENT_ID", monotonically_increasing_id())
 
   /** The reference's `preprocess_accidents`: parse date/hour, cast
-    * coordinates, drop incomplete rows.
+    * coordinates, drop incomplete rows. The parses are the `try_` forms,
+    * so an unparseable key field (the `Non précisé` unknown-hour marker,
+    * a non-numeric coordinate) becomes null and drops its row instead of
+    * failing the read under ANSI mode.
     */
   def preprocess(accidents: DataFrame,
       dateCol: String = "DT_ACCDN", hourCol: String = "HEURE_ACCDN",
       latCol: String = "LOC_LAT", lonCol: String = "LOC_LONG"): DataFrame =
     accidents
-      .withColumn("date", to_date(col(dateCol), "yyyy/MM/dd"))
-      .withColumn("hour", split(col(hourCol), ":").getItem(0).cast("int"))
+      .withColumn("date", try_to_date(col(dateCol), "yyyy/MM/dd"))
+      .withColumn("hour", split(col(hourCol), ":").getItem(0).try_cast("int"))
       // temp names: withColumn("loc_lat", ...) would case-insensitively
       // REPLACE the source column "LOC_LAT" and the subsequent drop
       // would remove the result
-      .withColumn("_loc_lat", col(latCol).cast("double"))
-      .withColumn("_loc_long", col(lonCol).cast("double"))
+      .withColumn("_loc_lat", col(latCol).try_cast("double"))
+      .withColumn("_loc_long", col(lonCol).try_cast("double"))
       .drop(dateCol, hourCol, latCol, lonCol)
       .withColumnRenamed("_loc_lat", "loc_lat")
       .withColumnRenamed("_loc_long", "loc_long")

@@ -13,7 +13,7 @@ class RandomUnderSamplerSpec extends SparkSpec {
     val df = (0 until 10000).map(i => (i.toLong, if (i % 10 == 0) 1.0 else 0.0))
       .toDF("id", "label")
     val m = new RandomUnderSampler().setTargetImbalanceRatio(2.0).setSeed(42L)
-      .setIndexCol("id").setHashSampling(true).fit(df)
+      .setIndexCol("id").fit(df)
     val out = m.transform(df)
     val nPos = out.filter($"label" === 1.0).count()
     val nNeg = out.filter($"label" === 0.0).count()
@@ -25,17 +25,17 @@ class RandomUnderSamplerSpec extends SparkSpec {
       m.transform(df).agg(sum("id")).head.getLong(0))
   }
 
-  test("keepFraction >= 1 is the identity; seeded Bernoulli path also converges") {
+  test("keepFraction >= 1 is the identity on balanced data") {
     val s = spark; import s.implicits._
     val balanced = (0 until 100).map(i => (i.toLong, (i % 2).toDouble)).toDF("id", "label")
-    val m1 = new RandomUnderSampler().setTargetImbalanceRatio(2.0).fit(balanced)
-    assert(m1.transform(balanced).count() == 100)
-    val skew = (0 until 10000).map(i => (i.toLong, if (i % 10 == 0) 1.0 else 0.0))
-      .toDF("id", "label")
-    val m2 = new RandomUnderSampler().setTargetImbalanceRatio(1.0).setSeed(7L)
-      .setIndexCol("id").fit(skew)
-    val r = m2.transform(skew).filter($"label" === 0.0).count().toDouble / 1000
-    assert(math.abs(r - 1.0) < 0.2, s"bernoulli ratio $r")
+    // ratio 1 at or under the target: nothing removed, for either target
+    Seq(2.0, 1.0).foreach { target =>
+      val m = new RandomUnderSampler().setTargetImbalanceRatio(target).setSeed(7L)
+        .setIndexCol("id").fit(balanced)
+      assert(m.keepFraction == 1.0 && m.removedIds.isEmpty, s"target $target")
+      assert(m.transform(balanced).exceptAll(balanced).isEmpty &&
+        balanced.exceptAll(m.transform(balanced)).isEmpty, s"target $target")
+    }
   }
 
   test("hash sampling survives monotonically_increasing_id-scale ids under ANSI mode") {
@@ -46,7 +46,7 @@ class RandomUnderSamplerSpec extends SparkSpec {
       case true => 1.0; case false => 0.0
     })).toDF("id", "label")
     val m = new RandomUnderSampler().setTargetImbalanceRatio(1.0).setSeed(42L)
-      .setIndexCol("id").setHashSampling(true).fit(big)
+      .setIndexCol("id").fit(big)
     val out = m.transform(big)
     assert(out.filter($"label" === 1.0).count() == 20)
     assert(out.filter($"label" === 0.0).count() < 80) // actually sampled, no throw
@@ -59,7 +59,7 @@ class RandomUnderSamplerSpec extends SparkSpec {
     val test = (10000 until 10200).map(i => (i.toLong, if (i % 10 == 0) 1.0 else 0.0))
       .toDF("id", "label")
     val m = new RandomUnderSampler().setTargetImbalanceRatio(1.0).setSeed(42L)
-      .setIndexCol("id").setHashSampling(true).fit(train)
+      .setIndexCol("id").fit(train)
     assert(m.transform(train).count() < 1000)  // train resampled
     assert(m.transform(test).count() == 200)   // test untouched (disjoint ids)
   }

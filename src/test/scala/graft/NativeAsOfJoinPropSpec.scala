@@ -14,9 +14,7 @@ import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
 class NativeAsOfJoinPropSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private case class L(k: Option[Int], t: Option[Long], id: Long)
-  private case class R(k: Option[Int], t: Option[Long], v: Double)
+  import NativeAsOfJoinPropSpec.{L, R, reference}
 
   /** Deterministic xorshift so every CI run replays the same cases. */
   private class Rng(seed0: Long) {
@@ -25,7 +23,7 @@ class NativeAsOfJoinPropSpec extends SparkSpec {
     def nextInt(n: Int): Int = math.floorMod(nextLong(), n.toLong).toInt
   }
 
-  private def genCase(rng: Rng): (Seq[L], Seq[R]) = {
+  private def genCase(rng: Rng): (Seq[L[Int]], Seq[R[Int, Double]]) = {
     val nKeys = 1 + rng.nextInt(4)
     val left = (0 until 1 + rng.nextInt(25)).map { i =>
       val k = if (rng.nextInt(12) == 0) None else Some(rng.nextInt(nKeys))
@@ -41,34 +39,6 @@ class NativeAsOfJoinPropSpec extends SparkSpec {
       if (seen.add((k, t))) Some(R(k, t, i + 0.5)) else None
     }
     (left, right)
-  }
-
-  /** The obviously-correct model: scan all candidates per left row. */
-  private def reference(left: Seq[L], right: Seq[R], inner: Boolean,
-      tol: Option[Long], dir: AsOfDirection): Seq[(Long, Option[Double])] = {
-    val out = left.map { l =>
-      val hit: Option[R] = (l.k, l.t) match {
-        case (Some(k), Some(t)) =>
-          val cands = right.filter(r => r.k.contains(k) && r.t.isDefined)
-          val bwd = cands.filter(_.t.get <= t).sortBy(_.t.get).lastOption
-            .filter(r => tol.forall(t - r.t.get <= _))
-          val fwd = cands.filter(_.t.get >= t).sortBy(_.t.get).headOption
-            .filter(r => tol.forall(r.t.get - t <= _))
-          dir match {
-            case AsOfDirection.Backward => bwd
-            case AsOfDirection.Forward => fwd
-            case AsOfDirection.Nearest => (bwd, fwd) match {
-              case (Some(b), Some(f)) =>
-                // ties go backward
-                if (t - b.t.get <= f.t.get - t) Some(b) else Some(f)
-              case (b, f) => b.orElse(f)
-            }
-          }
-        case _ => None
-      }
-      l.id -> hit.map(_.v)
-    }
-    if (inner) out.filter(_._2.isDefined) else out
   }
 
   test("both native execs == reference model across directions, modes, tolerances") {
@@ -130,5 +100,40 @@ class NativeAsOfJoinPropSpec extends SparkSpec {
           s"case $caseNo dir=$dir inner=$inner tol=$tol width=$width\nleft=$l\nright=$r")
       }
     }
+  }
+}
+
+/** The brute-force reference model, shared with `NativeAsOfJoinSpec`. */
+object NativeAsOfJoinPropSpec {
+
+  case class L[K](k: Option[K], t: Option[Long], id: Long)
+  case class R[K, V](k: Option[K], t: Option[Long], v: V)
+
+  /** The obviously-correct model: scan all candidates per left row. */
+  def reference[K, V](left: Seq[L[K]], right: Seq[R[K, V]], inner: Boolean,
+      tol: Option[Long], dir: AsOfDirection): Seq[(Long, Option[V])] = {
+    val out = left.map { l =>
+      val hit: Option[R[K, V]] = (l.k, l.t) match {
+        case (Some(k), Some(t)) =>
+          val cands = right.filter(r => r.k.contains(k) && r.t.isDefined)
+          val bwd = cands.filter(_.t.get <= t).sortBy(_.t.get).lastOption
+            .filter(r => tol.forall(t - r.t.get <= _))
+          val fwd = cands.filter(_.t.get >= t).sortBy(_.t.get).headOption
+            .filter(r => tol.forall(r.t.get - t <= _))
+          dir match {
+            case AsOfDirection.Backward => bwd
+            case AsOfDirection.Forward => fwd
+            case AsOfDirection.Nearest => (bwd, fwd) match {
+              case (Some(b), Some(f)) =>
+                // ties go backward
+                if (t - b.t.get <= f.t.get - t) Some(b) else Some(f)
+              case (b, f) => b.orElse(f)
+            }
+          }
+        case _ => None
+      }
+      l.id -> hit.map(_.v)
+    }
+    if (inner) out.filter(_._2.isDefined) else out
   }
 }

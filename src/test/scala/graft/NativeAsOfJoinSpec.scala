@@ -1,7 +1,6 @@
 package graft
 
-import graft.operators.AsOfJoin
-import graft.plans.{AsOfJoinNode, NativeAsOfJoin}
+import graft.plans.{AsOfDirection, AsOfJoinNode, NativeAsOfJoin}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.functions._
 
@@ -9,8 +8,8 @@ import java.sql.Timestamp
 
 /** The native whole-operator as-of join (logical node → strategy →
   * sort-merge exec, injected via SparkSessionExtensions) against
-  * hand-computed expectations, the compositional union+window operator,
-  * and its plan shape.
+  * hand-computed expectations, the brute-force reference model on the
+  * events fixture, and its plan shape.
   */
 class NativeAsOfJoinSpec extends SparkSpec {
 
@@ -333,24 +332,30 @@ class NativeAsOfJoinSpec extends SparkSpec {
     assert(got === Map(1L -> 7.0, 2L -> null, 3L -> null))
   }
 
-  test("native == compositional union+window on the events fixture") {
+  test("native == brute-force reference model on the events fixture") {
+    import NativeAsOfJoinPropSpec.{L, R, reference}
     val ev = Tables.load(spark, TestSpark.sf0001, "events")
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id".as("purchase_id"), $"user_id", $"ts")
-    val clicksN = ev.filter($"event_type" === "click")
+    val clicks = ev.filter($"event_type" === "click")
       .select($"user_id", $"ts".as("cts"), $"event_id".as("click_id"))
-    val native = NativeAsOfJoin.asOf(purchases, clicksN, "user_id", "ts", "cts",
+    val native = NativeAsOfJoin.asOf(purchases, clicks, "user_id", "ts", "cts",
         Seq("click_id", "cts"))
-      .select($"purchase_id", $"click_id", unix_micros($"cts").as("c_us"))
-    val clicksC = ev.filter($"event_type" === "click")
-      .select($"user_id", $"ts", $"event_id")
-    val comp = AsOfJoin.asOf(purchases, clicksC, "user_id", "ts", "ts",
-        Seq("event_id", "ts"))
-      .select($"purchase_id", $"asof.event_id".as("click_id"),
-        unix_micros($"asof.ts").as("c_us"))
-    assert(native.count() === purchases.count(), "left-outer: one row per left row")
-    assert(native.exceptAll(comp).isEmpty && comp.exceptAll(native).isEmpty,
-      "native and compositional as-of must agree row-for-row")
+      .select($"purchase_id", $"click_id", unix_micros($"cts"))
+      .collect().map(r => r.getLong(0) ->
+        (if (r.isNullAt(1)) None else Some((r.getLong(1), r.getLong(2)))))
+      .sortBy(_._1).toSeq
+    def opt(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val l = purchases.select($"user_id", unix_micros($"ts"), $"purchase_id").collect()
+      .map(r => L(opt(r, 0), opt(r, 1), r.getLong(2))).toSeq
+    val rr = clicks.select($"user_id", unix_micros($"cts"), $"click_id").collect()
+      .map(r => R(opt(r, 0), opt(r, 1), (r.getLong(2), r.getLong(1)))).toSeq
+    val want = reference(l, rr, inner = false, tol = None, AsOfDirection.Backward)
+      .sortBy(_._1)
+    assert(native.length === l.length, "left-outer: one row per left row")
+    assert(want.count(_._2.isDefined) > 0, "the fixture must exercise matches")
+    assert(native === want, "native as-of must agree with the reference row-for-row")
   }
 
   test("plan: AsOfJoin exec with one shuffle+sort per side, no window, no union") {

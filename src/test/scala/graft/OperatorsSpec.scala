@@ -610,6 +610,8 @@ class NearestMatchSpec extends SparkSpec {
   }
 }
 
+/** The point-in-interval join: each point is the one-point interval
+  * [p, p] fed to `IntervalJoin.overlap`, as `q_join_range_bucketed` runs it. */
 class RangeJoinSpec extends SparkSpec {
 
   test("bucketed point-in-interval equals the naive BETWEEN join, once per pair") {
@@ -619,30 +621,13 @@ class RangeJoinSpec extends SparkSpec {
     val iv = Seq.tabulate(60) { i =>
       val lo = rnd.nextInt(10000).toLong; (i.toLong, lo, lo + rnd.nextInt(700))
     }.toDF("iid", "lo", "hi")
-    val fast = RangeJoin.pointInInterval(pts, iv, "p", "lo", "hi", bucketWidth = 256L)
+    val fast = IntervalJoin.overlap(pts, iv, "p", "p", "lo", "hi", bucketUs = 256L)
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1)))
     val naive = pts.join(iv, col("p") >= col("lo") && col("p") <= col("hi"))
       .select("pid", "iid").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(naive.nonEmpty)
     assert(fast.length == fast.distinct.length) // exactly once per pair
     assert(fast.sorted.toSeq == naive.sorted.toSeq)
-  }
-}
-
-class AsOfJoinSpec extends SparkSpec {
-
-  test("as-of: latest earlier row wins, equal times match, no history gives null") {
-    val s = spark; import s.implicits._
-    val left = Seq((1L, 100L, 10L), (2L, 100L, 20L), (3L, 200L, 5L))
-      .toDF("lid", "k", "t")
-    val right = Seq((101L, 100L, 5L), (102L, 100L, 10L), (103L, 100L, 15L),
-      (104L, 200L, 6L)).toDF("rid", "k", "t")
-    val out = AsOfJoin.asOf(left, right, key = "k",
-        leftTime = "t", rightTime = "t", payloadCols = Seq("rid"))
-      .select(col("lid"), col("asof.rid").as("rid"))
-      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    assert(out(1L).contains(102L)) // t=10: the equal-time row matches, not t=5
-    assert(out(2L).contains(103L)) // t=20: latest of the three
-    assert(out(3L).isEmpty)        // t=5 < earliest right (t=6): null
   }
 }
 

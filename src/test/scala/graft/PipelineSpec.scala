@@ -32,7 +32,7 @@ class PipelineSpec extends SparkSpec {
   private lazy val accidentsCsvPath: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_e2e").toString
     val f = new java.io.File(dir, "accidents.csv")
-    val w = new java.io.PrintWriter(f)
+    val w = new java.io.PrintWriter(f, "UTF-8")
     w.println("DT_ACCDN,HEURE_ACCDN,LOC_LAT,LOC_LONG")
     (0 until 60).foreach { k =>
       val s = k % nStreets
@@ -40,6 +40,9 @@ class PipelineSpec extends SparkSpec {
       val y = 2016 + (k % 2); val m = k % 12 + 1; val d = k % 28 + 1; val h = k % 24
       w.println(f"$y%04d/$m%02d/$d%02d,$h%d:15,$la%.5f,$lo%.5f")
     }
+    // unparseable key fields (FIXTURES.md A1): dropped, never a failed read
+    w.println(f"2016/05/05,Non précisé,${centerLat(0)}%.5f,${centerLon(0)}%.5f")
+    w.println(f"2016/05/05,10:15,n/a,${centerLon(0)}%.5f")
     w.close()
     f.toString
   }

@@ -36,11 +36,13 @@ class PlanSpec extends SparkSpec {
       "lang IN (...) must land in PartitionFilters (directory pruning), got:\n" + p)
   }
 
-  test("as-of join plans as union + window — no join operator at all") {
+  test("as-of join plans the native AsOfJoin exec — no window, no union, no range join") {
     val p = plan("q_join_asof_click")
-    assert(p.contains("Union") && p.contains("Window"))
-    assert(!p.contains("Join"), // no SortMerge/BroadcastHash/NestedLoop anywhere
-      "as-of must ride the tagged-union window, not a join")
+    assert(p.contains("AsOfJoin"), "native exec must plan:\n" + p)
+    assert(!p.contains("Window") && !p.contains("Union"),
+      "as-of must not fall back to a union+window composition:\n" + p)
+    assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct") &&
+      !p.contains("SortMergeJoin"), "as-of must not plan a range join:\n" + p)
   }
 
   test("range join plans as an equi-join on the bucket, not a nested loop") {

@@ -69,11 +69,13 @@ class PlanSpecR11 extends SparkSpec {
       "rank ≤ k must push a group limit below the exchange:\n" + p)
   }
 
-  test("attribution: as-of credit assignment is the tagged union window, not a range join") {
+  test("attribution: as-of credit is the native AsOfJoin exec, not a range join") {
     val p = plan("q_events_attribution")
-    assert(p.contains("Union") && p.contains("Window"))
-    assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastNestedLoopJoin"),
-      "lookback credit must not plan a range join:\n" + p)
+    assert(p.contains("AsOfJoin"), "native exec must plan:\n" + p)
+    assert(!p.contains("Window") && !p.contains("Union"),
+      "as-of must not fall back to a union+window composition:\n" + p)
+    assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastNestedLoopJoin") &&
+      !p.contains("CartesianProduct"), "lookback credit must not plan a range join:\n" + p)
   }
 
   test("rolling-origin: fold classification happens on the per-day rollup, not the fact") {
